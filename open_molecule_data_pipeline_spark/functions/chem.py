@@ -317,22 +317,11 @@ def _write_component(comp_atoms, atoms, bonds, ranks) -> str:
     return "".join(out)
 
 
-def canonical_smiles(s: str) -> str:
-    """Canonical form of a subset-SMILES string (see module docstring).
-
-    Equivalent spellings (different atom orders, branch orders, ring-closure
-    numbering, redundant single/aromatic bond marks) map to one string.
-    Raises :class:`SmilesError` on unsupported or malformed input.
-    """
-    atoms, bonds = parse_smiles(s)
-    if len(atoms) > 5000:
-        raise SmilesError("molecule too large for the subset canonicalizer")
-    import sys
-
-    if sys.getrecursionlimit() < 4 * len(atoms) + 100:
-        sys.setrecursionlimit(4 * len(atoms) + 100)
+def _write_canonical(atoms: list[_Atom], bonds: dict[tuple[int, int], str]) -> str:
+    """Rank the graph, split it into connected components (ring closures
+    may bridge '.') and join the components' canonical strings in sorted
+    order."""
     ranks = _canonical_ranks(atoms, bonds)
-    # components from actual connectivity (ring closures may bridge '.')
     comp_of = [-1] * len(atoms)
     comps: list[list[int]] = []
     for seed in range(len(atoms)):
@@ -348,10 +337,26 @@ def canonical_smiles(s: str) -> str:
                     comp_of[v] = len(comps)
                     frontier.append(v)
         comps.append(members)
-    parts = sorted(
-        _write_component(members, atoms, bonds, ranks) for members in comps
+    return ".".join(
+        sorted(_write_component(members, atoms, bonds, ranks) for members in comps)
     )
-    return ".".join(parts)
+
+
+def canonical_smiles(s: str) -> str:
+    """Canonical form of a subset-SMILES string (see module docstring).
+
+    Equivalent spellings (different atom orders, branch orders, ring-closure
+    numbering, redundant single/aromatic bond marks) map to one string.
+    Raises :class:`SmilesError` on unsupported or malformed input.
+    """
+    atoms, bonds = parse_smiles(s)
+    if len(atoms) > 5000:
+        raise SmilesError("molecule too large for the subset canonicalizer")
+    import sys
+
+    if sys.getrecursionlimit() < 4 * len(atoms) + 100:
+        sys.setrecursionlimit(4 * len(atoms) + 100)
+    return _write_canonical(atoms, bonds)
 
 
 def try_canonical_smiles(s: str | None) -> str | None:
@@ -413,24 +418,4 @@ def murcko_scaffold(s: str) -> str | None:
     # pruned atom cannot occur — pruning never removes a cut atom of two
     # rings, its degree stays >= 2 — but '.'-separated multi-component
     # inputs can each carry rings)
-    ranks = _canonical_ranks(new_atoms, new_bonds)
-    comp_of = [-1] * len(new_atoms)
-    comps: list[list[int]] = []
-    for seed in range(len(new_atoms)):
-        if comp_of[seed] >= 0:
-            continue
-        members, frontier = [], [seed]
-        comp_of[seed] = len(comps)
-        while frontier:
-            u = frontier.pop()
-            members.append(u)
-            for v in new_atoms[u].neighbors:
-                if comp_of[v] < 0:
-                    comp_of[v] = len(comps)
-                    frontier.append(v)
-        comps.append(members)
-    parts = sorted(
-        _write_component(members, new_atoms, new_bonds, ranks)
-        for members in comps
-    )
-    return ".".join(parts)
+    return _write_canonical(new_atoms, new_bonds)

@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 
 from ..catalog import table
 from ..registry import register
+from ._stream import run_to_memory, staged_stream
 from ._util import spread
 
 _N_PAL = 64  # fixture palette size -> LZW min code size 6
@@ -1244,18 +1245,8 @@ def stream_aspect_batch_twin(spark, sf_dir):
     ``mm_aspect_batch_formation``: decode + route per microbatch,
     stateful per-(bucket, shard) batch formation across microbatches,
     partials dropped at stream end — same oracle as the batch query."""
-    import glob as _glob
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..session import tune_session
-    from .streaming_twin import _run_to_memory
-
-    tune_session(spark)
     docs = spread(table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id"
     )
@@ -1268,39 +1259,7 @@ def stream_aspect_batch_twin(spark, sf_dir):
         .cast("int")
         .alias("band"),
     )
-    stage = tempfile.mkdtemp(
-        prefix="omdp_aspect_twin_",
-        dir="/dev/shm" if os.access("/dev/shm", os.W_OK) else None,
-    )
-    try:
-        part_root = f"{stage}/_parts"
-        (
-            banded.coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(part_root)
-        )
-        present = []
-        staged_bytes = 0
-        for band in (0, 1, 2):
-            parts = _glob.glob(f"{part_root}/band={band}/part-*.parquet")
-            if parts:
-                shutil.move(parts[0], f"{stage}/band{band}.parquet")
-                staged_bytes += os.path.getsize(f"{stage}/band{band}.parquet")
-                present.append(band)
-        shutil.rmtree(part_root, ignore_errors=True)
-        now = _time.time()
-        for i, band in enumerate(present):
-            t = now - 60 * (len(present) - i)
-            os.utime(f"{stage}/band{band}.parquet", (t, t))
-
-        schema = T.StructType([T.StructField("doc_id", T.LongType())])
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(stage)
-        )
+    with staged_stream(spark, banded, "band", (0, 1, 2)) as (stream, nbytes):
         # Each microbatch is ONE staged file = one scan partition, so
         # without a redistribution the whole band's GIF encode+decode
         # runs serially in a single Python task (r16 profile: ~9 s of
@@ -1339,12 +1298,8 @@ def stream_aspect_batch_twin(spark, sf_dir):
         # exact input): the (bucket, shard) key space is bounded at
         # len(_AR_BUCKETS) * _BATCH_SHARDS, so kilobyte-scale inputs get a
         # 1-partition store instead of a core-count fan-out of empty
-        # state commits (see _run_to_memory's sizing note).
-        sunk = _run_to_memory(
-            spark, formed, output_mode="update", input_bytes=staged_bytes
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        # state commits (see run_to_memory's sizing note).
+        sunk = run_to_memory(spark, formed, output_mode="update", input_bytes=nbytes)
     final = (
         sunk.groupBy("bucket", "shard")
         .agg(

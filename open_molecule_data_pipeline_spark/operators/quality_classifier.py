@@ -26,8 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import stream_table, table
 from ..registry import register
+from ._stream import run_to_memory
 from ._util import spread
 
 _N_BUCKETS = 65536  # 2^16 hashed feature buckets
@@ -145,8 +146,8 @@ def text_quality_classifier_hashed(spark, sf_dir):
 # nightly-ingest deployment shape of model-based quality filtering: score
 # documents as they arrive, keep a running per-slice keep-rate for drift
 # monitoring. Lives here (not streaming_twin.py) because it shares this
-# module's scoring constants; the twin HARNESS (_run_to_memory) is
-# imported lazily from streaming_twin to avoid a circular import.
+# module's scoring constants; input and sink go through the same
+# catalog.stream_table / _stream.run_to_memory path as every other twin.
 # --------------------------------------------------------------------------
 
 _QGATE_TWIN_ORACLE = (
@@ -173,16 +174,7 @@ GROUP BY lang
 def stream_quality_gate_twin(spark, sf_dir):
     """Per-lang keep-rate of the hashed classifier computed by a real
     availableNow streaming run over the documents table."""
-    from ..session import tune_session
-    from .streaming_twin import _run_to_memory, _stream_input_bytes
-
-    tune_session(spark)
-    raw = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
-    docs = (
-        spark.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    docs, nbytes = stream_table(spark, sf_dir, "documents")
     mean_w = (
         "CASE WHEN n_features = 0 THEN 0"
         " WHEN w_sum < 0 THEN -((-w_sum) div n_features)"
@@ -208,9 +200,4 @@ def stream_quality_gate_twin(spark, sf_dir):
         .alias("n_kept"),
         F.sum("w_sum").cast("long").alias("sum_w"),
     )
-    return _run_to_memory(
-        spark,
-        agg,
-        output_mode="complete",
-        input_bytes=_stream_input_bytes(sf_dir, "documents"),
-    )
+    return run_to_memory(spark, agg, output_mode="complete", input_bytes=nbytes)

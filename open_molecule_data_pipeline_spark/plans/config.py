@@ -16,8 +16,6 @@ from typing import Any, Literal
 import yaml
 from pydantic import BaseModel, Field, field_validator, model_validator
 
-SOURCE_TYPES = ("sdf", "smiles_table", "http", "chemspider")
-
 
 class SourceDefinition(BaseModel):
     type: Literal[

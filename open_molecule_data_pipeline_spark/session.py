@@ -85,8 +85,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
-    for key, value in RUNTIME_CONFS.items():
-        builder = builder.config(key, value)
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)
     return tune_session(builder.getOrCreate())

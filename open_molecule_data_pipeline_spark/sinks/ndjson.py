@@ -14,7 +14,6 @@ downstream consumer exactly like the reference's batching did.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def write_ndjson(
@@ -23,26 +22,18 @@ def write_ndjson(
     *,
     batch_size: int = 1000,
     compress: bool = True,
-    partition_by_source: bool = False,
     mode: str = "overwrite",
 ) -> None:
-    writer = (
+    (
         df.write.mode(mode)
         .option("maxRecordsPerFile", batch_size)
         .option("compression", "gzip" if compress else "none")
         .option("ignoreNullFields", "false")
+        .json(output_dir)
     )
-    if partition_by_source and "source" in df.columns:
-        writer = writer.partitionBy("source")
-    writer.json(output_dir)
 
 
 def read_ndjson(spark, path: str, schema) -> DataFrame:
     """Read batches back (schema explicit — never inferred, SURVEY.md §1.3)."""
     return spark.read.schema(schema).json(path)
 
-
-def summarize_output(df: DataFrame) -> DataFrame:
-    """Per-source record counts for the run report (reference
-    ``runner.py:196-252`` keeps these as in-loop counters)."""
-    return df.groupBy("source").agg(F.count(F.lit(1)).alias("records_written"))

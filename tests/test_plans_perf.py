@@ -257,6 +257,38 @@ def test_no_partitionless_sql_windows_in_spark_side_text():
     assert not stale, f"stale _PARTITIONLESS_SQL_EXEMPT entries: {stale}"
 
 
+def test_one_streaming_input_path():
+    """Streaming input decisions have one owner each: testdata tables
+    stream through ``catalog.stream_table``, ordered micro-batch inputs are
+    staged by ``operators/_stream.py``, and that module alone picks the
+    scratch location. Outside it, no operator module may open a
+    ``readStream``, import ``tune_session`` (catalog applies the runtime
+    confs), name ``/dev/shm`` or pin mtimes with ``os.utime``; the events
+    nanos -> micros rescale lives only in ``catalog.py``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "open_molecule_data_pipeline_spark"
+    offenders: list[str] = []
+    for path in sorted((pkg / "operators").rglob("*.py")):
+        if path.name == "_stream.py":
+            continue
+        src = path.read_text()
+        if "/dev/shm" in src:
+            offenders.append(f"{path.name}: /dev/shm")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Attribute) and node.attr in ("readStream", "utime"):
+                offenders.append(f"{path.name}:{node.lineno}: .{node.attr}")
+            if isinstance(node, ast.ImportFrom) and any(
+                a.name == "tune_session" for a in node.names
+            ):
+                offenders.append(f"{path.name}:{node.lineno}: imports tune_session")
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name != "catalog.py" and "ts div 1000" in path.read_text():
+            offenders.append(f"{path.relative_to(pkg)}: ts div 1000")
+    assert not offenders, offenders
+
+
 def test_ntile_and_packing_plans_have_no_global_window(spark, sf_dir):
     """The two-pass rewrites must not contain a partitionless Window node:
     every Window in the plan either partitions by __pid or runs over the

@@ -447,3 +447,58 @@ def test_tws_registers_with_runtime_dispatch(spark):
         .collect()
     }
     assert got == want
+
+
+def test_staged_stream_bands_arrive_in_order(spark, monkeypatch, tmp_path):
+    """staged_stream delivers one band per micro-batch in the GIVEN order
+    (not lexical: z before a), skips a band with no rows, and deletes its
+    scratch dir when the ``with`` block exits."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from open_molecule_data_pipeline_spark.operators import _stream
+
+    made = []
+    real_scratch_dir = _stream.scratch_dir
+
+    def recording_scratch_dir(prefix):
+        made.append(real_scratch_dir(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(_stream, "scratch_dir", recording_scratch_dir)
+
+    df = spark.createDataFrame(
+        [(1, "z"), (2, "z"), (3, "a"), (4, "m"), (5, "m"), (6, "m")],
+        "k long, tag string",
+    ).withColumn("band", F.col("tag"))
+    batches = []
+
+    def collect(batch_df, batch_id):
+        rows = batch_df.collect()
+        if rows:
+            batches.append(
+                (sorted({r.tag for r in rows}), sorted(r.k for r in rows))
+            )
+
+    with _stream.staged_stream(spark, df, "band", ("z", "empty", "a", "m")) as (
+        stream,
+        nbytes,
+    ):
+        assert stream.columns == ["k", "tag"]
+        assert nbytes > 0
+        (stage,) = made
+        assert sorted(os.listdir(stage)) == ["a.parquet", "m.parquet", "z.parquet"]
+        query = (
+            stream.writeStream.foreachBatch(collect)
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    assert batches == [
+        (["z"], [1, 2]),
+        (["a"], [3]),
+        (["m"], [4, 5, 6]),
+    ]
+    assert not os.path.exists(stage)
